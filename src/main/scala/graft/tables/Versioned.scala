@@ -1,8 +1,9 @@
 package graft.tables
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Snapshot-versioned bare-parquet tables: time travel + snapshot
   * isolation for the DML surface (r14 verdict item 2).
@@ -16,11 +17,18 @@ import org.apache.spark.sql.functions.{coalesce, col, lit}
   *   - Data files are IMMUTABLE once written; mutations only ever ADD
   *     files (append-mode writes — never dynamic overwrite, never a
   *     directory delete).
-  *   - A snapshot `_graft_versions/v{N}.json` lists the files LIVE at
-  *     version N (relative path + length). The snapshot file is
-  *     staged to a temp name and RENAMED into place — one atomic
-  *     commit after every data file is fully written, so no reader
-  *     can resolve a version whose files are incomplete.
+  *   - A snapshot `_graft_versions/v{N}.json` holds everything version
+  *     N is: the files LIVE at N (relative path + length), the declared
+  *     schema (data columns, then hive partition columns), the rename
+  *     chains of renamed columns, and the streaming batch stamp. The
+  *     snapshot file is staged to a temp name and RENAMED into place —
+  *     one atomic commit after every data file is fully written, so no
+  *     reader can resolve a version whose files are incomplete.
+  *   - Every commit copies the current snapshot with the next version
+  *     number and whatever the operation changes, so the schema,
+  *     renames and batch stamp carry forward by construction. Because
+  *     the schema is declared, a read builds its plan from the snapshot
+  *     alone — no footer is opened to plan it.
   *   - The current version is simply the max N present — no separate
   *     pointer file to swap (a pointer overwrite is delete+create on
   *     HDFS-semantics filesystems, which has a torn window; max-N
@@ -64,6 +72,15 @@ object Versioned {
 
   val VersionsDirName = "_graft_versions"
 
+  /** One committed version. `renames` maps a declared column name to
+    * the CHAIN of prior physical names still present in older live
+    * files, newest first (a→b→c stores "c" -> ["b", "a"]); `batchId`
+    * is the last micro-batch the streaming sink committed — the
+    * idempotence marker for replay skipping. */
+  private final case class Snapshot(version: Int, files: Seq[(String, Long)],
+      schema: StructType, renames: Map[String, Seq[String]] = Map.empty,
+      batchId: Option[Long] = None)
+
   private def fsOf(spark: SparkSession, root: Path): FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -95,35 +112,47 @@ object Versioned {
     b.result()
   }
 
+  /** Committed version numbers, ascending; empty for an unversioned
+    * directory. */
+  private def versions(fs: FileSystem, root: Path): Seq[Int] = {
+    val vd = versionsDir(root)
+    if (!fs.exists(vd)) Nil
+    else fs.listStatus(vd).toSeq.map(_.getPath.getName).collect {
+      case SnapRe(n) => n.toInt
+    }.sorted
+  }
+
   /** Max committed version, or None for an unversioned directory. */
   def currentVersion(spark: SparkSession, path: String): Option[Int] = {
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val vd = versionsDir(root)
-    if (!fs.exists(vd)) None
-    else {
-      val vs = fs.listStatus(vd).toSeq.map(_.getPath.getName).collect {
-        case SnapRe(n) => n.toInt
-      }
-      if (vs.isEmpty) None else Some(vs.max)
-    }
+    versions(fsOf(spark, root), root).lastOption
   }
 
-  private def readSnapshotDoc(fs: FileSystem, root: Path, v: Int)
-      : org.json4s.JValue = {
+  /** The schema a plain read of `files` infers from their footers (one
+    * Spark job): data columns, then hive partition columns with their
+    * types as discovered. */
+  private def inferSchema(spark: SparkSession, root: Path,
+      files: Seq[(String, Long)]): StructType =
+    spark.read.option("basePath", root.toString)
+      .option("mergeSchema", "false")
+      .parquet(files.map(f => new Path(root, f._1).toString): _*).schema
+
+  /** Snapshot v — the only parser of the snapshot document. A snapshot
+    * written before schemas were recorded has no `schema` field; its
+    * schema is inferred from its files here (and the next commit
+    * records it), which is the only place that fallback lives. */
+  private def readSnapshot(spark: SparkSession, root: Path,
+      v: Int): Snapshot = {
+    import org.json4s._
+    val fs = fsOf(spark, root)
     val p = snapshotPath(root, v)
     require(fs.exists(p), s"Versioned: no snapshot v$v at $root " +
       "(wrong version, or expired/vacuumed past it)")
     val in = fs.open(p)
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    org.json4s.jackson.JsonMethods.parse(txt)
-  }
-
-  private def readSnapshot(fs: FileSystem, root: Path, v: Int)
-      : Seq[(String, Long)] = {
-    import org.json4s._
-    (readSnapshotDoc(fs, root, v) \ "files") match {
+    val doc = org.json4s.jackson.JsonMethods.parse(txt)
+    val files = (doc \ "files") match {
       case JArray(fsx) => fsx.flatMap { e =>
         for {
           JString(rel) <- Option(e \ "path")
@@ -132,32 +161,7 @@ object Versioned {
       }
       case _ => sys.error(s"Versioned: unparseable snapshot v$v at $root")
     }
-  }
-
-  /** The snapshot's DECLARED schema, set once [[addColumn]] has evolved
-    * the table (absent before any evolution — the schema is then simply
-    * what the files carry). Committed forward by every subsequent
-    * commit, so "the schema as of version v" time-travels with v. */
-  private def snapshotSchema(fs: FileSystem, root: Path, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    import org.json4s._
-    (readSnapshotDoc(fs, root, v) \ "schema") match {
-      case JString(json) =>
-        Some(org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case _ => None
-    }
-  }
-
-  /** The snapshot's rename map: declared column name → the CHAIN of
-    * prior physical names still present in older live files, newest
-    * first (a→b→c stores "c" -> ["b", "a"]). Written by
-    * [[renameColumn]], carried forward by every commit, consumed by
-    * [[alignTo]]'s coalesce. */
-  private def snapshotRenames(fs: FileSystem, root: Path, v: Int)
-      : Map[String, Seq[String]] = {
-    import org.json4s._
-    (readSnapshotDoc(fs, root, v) \ "renames") match {
+    val renames = (doc \ "renames") match {
       case JArray(es) => es.flatMap { e =>
         for { JString(to) <- Option(e \ "to") } yield {
           val chain = (e \ "from") match {
@@ -167,47 +171,47 @@ object Versioned {
           to -> chain
         }
       }.toMap
-      case _ => Map.empty
+      case _ => Map.empty[String, Seq[String]]
     }
+    val schema = (doc \ "schema") match {
+      case JString(json) => DataType.fromJson(json).asInstanceOf[StructType]
+      // an emptied snapshot has no file to infer from; reading it
+      // fails on the empty-version require
+      case _ if files.isEmpty => new StructType()
+      case _ => inferSchema(spark, root, files)
+    }
+    val batchId = (doc \ "batchId") match {
+      case JInt(b) => Some(b.toLong)
+      case _ => None
+    }
+    Snapshot(v, files, schema, renames, batchId)
   }
 
-  /** The streaming batchId a snapshot committed, if it came from the
-    * micro-batch sink — the idempotence marker for replay skipping. */
-  def committedBatchId(spark: SparkSession, path: String): Option[Long] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    currentVersion(spark, path).flatMap { v =>
-      import org.json4s._
-      (readSnapshotDoc(fs, root, v) \ "batchId") match {
-        case JInt(b) => Some(b.toLong)
-        case _ => None
-      }
-    }
+  /** Snapshot `version` (default: the current one) of the table at
+    * `path`; a loud error naming `op` for an unversioned directory. */
+  private def snapshotOf(spark: SparkSession, path: String, op: String,
+      version: Option[Int] = None): Snapshot = {
+    val v = version.orElse(currentVersion(spark, path)).getOrElse(
+      sys.error(s"Versioned.$op: $path is not a versioned table"))
+    readSnapshot(spark, new Path(path), v)
   }
 
-  /** Stage + atomic-rename commit of snapshot v. Fails loudly if v
-    * already exists (a concurrent writer won the commit). */
-  private def writeSnapshot(fs: FileSystem, root: Path, v: Int,
-      files: Seq[(String, Long)], batchId: Option[Long] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      renames: Map[String, Seq[String]] = Map.empty): Unit = {
+  /** Stage + atomic-rename commit of `snap` — the only writer of the
+    * snapshot document. Fails loudly if its version already exists (a
+    * concurrent writer won the commit). Returns the committed version.
+    */
+  private def commit(spark: SparkSession, root: Path, snap: Snapshot): Int = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
-    val base0 = ("version" -> v) ~
-      ("files" -> files.sortBy(_._1).map { case (p, l) =>
-        ("path" -> p) ~ ("len" -> l) })
-    val base1 = schema match {
-      case Some(sc) => base0 ~ ("schema" -> sc.json)
-      case None => base0
-    }
-    val base = if (renames.nonEmpty)
-      base1 ~ ("renames" -> renames.toSeq.sortBy(_._1)
-        .map { case (k2, chain) => ("to" -> k2) ~ ("from" -> chain) })
-    else base1
-    val doc = batchId match {
-      case Some(b) => base ~ ("batchId" -> b)
-      case None => base
-    }
+    val v = snap.version
+    val doc = ("version" -> v) ~
+      ("files" -> snap.files.sortBy(_._1).map { case (p, l) =>
+        ("path" -> p) ~ ("len" -> l) }) ~
+      ("schema" -> snap.schema.json) ~
+      ("renames" -> snap.renames.toSeq.sortBy(_._1)
+        .map { case (to, chain) => ("to" -> to) ~ ("from" -> chain) }) ~
+      ("batchId" -> snap.batchId)
+    val fs = fsOf(spark, root)
     val vd = versionsDir(root)
     if (!fs.exists(vd)) fs.mkdirs(vd)
     val target = snapshotPath(root, v)
@@ -221,17 +225,9 @@ object Versioned {
     finally out.close()
     require(fs.rename(tmp, target),
       s"Versioned: atomic commit rename failed for $target")
+    v
   }
 
-  /** Append `df`'s rows as STAMPED new files: the write goes to a
-    * private staging dir under the versions dir (invisible to data
-    * listings and plain reads), then each data file is MOVED into the
-    * table under a commit-unique name prefix. The commit's file set
-    * is therefore known exactly — never inferred from a before/after
-    * directory diff — so a concurrent writer's files (a violated
-    * single-writer contract) can never be silently claimed by this
-    * commit's snapshot. Returns (relPath, len) of the moved files.
-    */
   /** Output sizing for versioned writes (r19, guide §6 small-files):
     * target ~128 MB files by DERIVED partition count — the
     * optimizer's size estimate over the write target, never the
@@ -255,6 +251,15 @@ object Versioned {
     }
   }
 
+  /** Append `df`'s rows as STAMPED new files: the write goes to a
+    * private staging dir under the versions dir (invisible to data
+    * listings and plain reads), then each data file is MOVED into the
+    * table under a commit-unique name prefix. The commit's file set
+    * is therefore known exactly — never inferred from a before/after
+    * directory diff — so a concurrent writer's files (a violated
+    * single-writer contract) can never be silently claimed by this
+    * commit's snapshot. Returns (relPath, len) of the moved files.
+    */
   private def stampedAppend(fs: FileSystem, root: Path,
       df: DataFrame, partitionCols: Seq[String]): Seq[(String, Long)] = {
     val stamp = java.util.UUID.randomUUID().toString
@@ -294,15 +299,15 @@ object Versioned {
     * snapshot. Hence: loud require, not a silent wrong table.
     */
   private def requireRenderablePartitionTypes(
-      df: DataFrame, partitionCols: Seq[String], op: String): Unit = {
+      schema: StructType, partitionCols: Seq[String], op: String): Unit = {
     import org.apache.spark.sql.types._
     val ok: Set[DataType] =
       Set(StringType, IntegerType, LongType, ShortType, ByteType,
         BooleanType, DateType)
-    val bad = partitionCols.filterNot(c => ok.contains(df.schema(c).dataType))
+    val bad = partitionCols.filterNot(c => ok.contains(schema(c).dataType))
     require(bad.isEmpty,
       s"Versioned.$op: partition column(s) ${bad.mkString(",")} have " +
-        s"type(s) ${bad.map(c => df.schema(c).dataType.simpleString).mkString(",")} " +
+        s"type(s) ${bad.map(c => schema(c).dataType.simpleString).mkString(",")} " +
         "whose JVM rendering differs from Spark's partition-directory " +
         "rendering — the touched-partition file drop would silently " +
         "keep stale files (duplicated rows). Partition on " +
@@ -310,67 +315,93 @@ object Versioned {
         "renderable partition key (e.g. date_format the timestamp)")
   }
 
-  /** Project `df` onto a DECLARED snapshot schema: columns the merged
-    * file read carries are cast into place; columns NO live file
-    * carries yet (an ADD COLUMN nothing has written to) read as typed
-    * NULLs; a RENAMED column coalesces across its physical-name chain
-    * (post-rename files carry the declared name, older files the
-    * prior names — each file carries exactly one, so the coalesce is
-    * a disjoint union, never a preference). Column order is the
-    * declared order. */
-  private def alignTo(df: DataFrame,
-      sc: org.apache.spark.sql.types.StructType,
-      renames: Map[String, Seq[String]] = Map.empty): DataFrame =
-    df.select(sc.fields.map { f =>
-      val sources = (f.name +: renames.getOrElse(f.name, Nil))
-        .filter(s => df.columns.exists(_.equalsIgnoreCase(s)))
-      sources match {
-        case Nil => lit(null).cast(f.dataType).as(f.name)
-        case one :: Nil => col(one).cast(f.dataType).as(f.name)
-        case many => coalesce(many.map(col): _*).cast(f.dataType)
-          .as(f.name)
-      }
-    }.toIndexedSeq: _*)
+  /** Whether `name` is a hive partition-directory column of `snap`:
+    * some live file sits under a directory segment `name=...`. */
+  private def isPartitionColumn(snap: Snapshot, name: String): Boolean = {
+    val prefix = s"${name.toLowerCase}="
+    snap.files.exists(_._1.split('/').init
+      .exists(_.toLowerCase.startsWith(prefix)))
+  }
+
+  /** `df`'s columns cast into `sc`'s order and types. */
+  private def castTo(df: DataFrame, sc: StructType): DataFrame =
+    df.select(sc.fields.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+
+  /** Read `paths` (some of `snap`'s files) as `snap`'s declared schema —
+    * the one read path behind [[load]], [[loadPruned]] and
+    * [[compact]]. Snapshots can mix file schemas (evolution moves no
+    * data), so the read schema is BUILT from the declared schema plus
+    * rename chains rather than inferred from footers: sound because
+    * this layer is the only writer and no operation changes a field's
+    * type, so every physical name in a chain was written with its
+    * field's declared type. A name no file carries reads as typed
+    * NULLs, and dropped columns are simply not requested. A renamed
+    * column then coalesces across its physical-name chain (each file
+    * carries exactly one of the names, so the coalesce is a disjoint
+    * union, never a preference); columns come out in declared order.
+    */
+  private def read(spark: SparkSession, root: Path, snap: Snapshot,
+      paths: Seq[String]): DataFrame = {
+    val chain = (f: StructField) => f.name +: snap.renames.getOrElse(f.name, Nil)
+    val readFields = snap.schema.fields.toSeq.flatMap(f =>
+      chain(f).map(n => StructField(n, f.dataType, nullable = true)))
+    spark.read.schema(StructType(readFields))
+      .option("basePath", root.toString)
+      .parquet(paths: _*)
+      .select(snap.schema.fields.map(f => chain(f) match {
+        case Seq(one) => col(one)
+        case names => coalesce(names.map(col): _*).as(f.name)
+      }).toIndexedSeq: _*)
+  }
+
+  /** `snap`'s files as paths, after a loud check that each is still on
+    * disk at its recorded length. */
+  private def livePaths(spark: SparkSession, root: Path, snap: Snapshot,
+      op: String): Seq[String] = {
+    val fs = fsOf(spark, root)
+    require(snap.files.nonEmpty,
+      s"Versioned.$op: v${snap.version} of $root is empty — zero live " +
+        "files; read an earlier version")
+    snap.files.map { case (rel, len) =>
+      val p = new Path(root, rel)
+      require(fs.exists(p) && fs.getFileStatus(p).getLen == len,
+        s"Versioned.$op: $rel of v${snap.version} is missing or resized — " +
+          "vacuumed past this version, or immutability was violated")
+      p.toString
+    }
+  }
+
+  private def loadSnapshot(spark: SparkSession, root: Path, snap: Snapshot,
+      op: String): DataFrame =
+    read(spark, root, snap, livePaths(spark, root, snap, op))
 
   /** ADD COLUMN schema evolution (r16 verdict item 4): commit a new
     * snapshot whose FILE LIST is unchanged but whose declared schema
     * gains `name` (nullable) at the end. No data moves — old files
-    * simply yield NULL for the column on read (union-widening via
-    * parquet mergeSchema), files written by later commits carry it,
-    * and a mixed snapshot reads both seamlessly. Time travel returns
-    * each version's OWN schema: versions before the evolution read
-    * without the column (their snapshots carry no declared schema, or
-    * an earlier one), versions after read with it. The declared schema
-    * is carried forward by every subsequent commit
-    * (insert/merge/update/delete/compact). Returns the committed
-    * version.
+    * simply read the column as typed NULL, files written by later
+    * commits carry it, and a mixed snapshot reads both seamlessly.
+    * Time travel returns each version's OWN schema: versions before
+    * the evolution read without the column, versions after read with
+    * it. Returns the committed version.
     *
     * Scale shape: a metadata-only commit — one sidecar JSON write; a
     * 100 TB table evolves in O(1).
     */
   def addColumn(spark: SparkSession, path: String, name: String,
-      dataType: org.apache.spark.sql.types.DataType): Int = {
+      dataType: DataType): Int = {
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.addColumn: $path is not a versioned table"))
-    val base = load(spark, path, Some(cur))
-    require(!base.columns.exists(_.equalsIgnoreCase(name)),
+    val cur = snapshotOf(spark, path, "addColumn")
+    val cols = cur.schema.fieldNames
+    require(!cols.exists(_.equalsIgnoreCase(name)),
       s"Versioned.addColumn: column '$name' already exists " +
-        s"(table has ${base.columns.mkString(",")})")
-    val live = readSnapshot(fs, root, cur)
-    val renames = snapshotRenames(fs, root, cur)
+        s"(table has ${cols.mkString(",")})")
     // with DROP/RENAME in the system, live files can carry LATENT
     // columns the declared schema no longer names — adding a column
     // under such a name would silently resurrect the old values
-    requireNoLatentCollision(spark, root, live, renames, name,
-      "addColumn")
-    val evolved = org.apache.spark.sql.types.StructType(
-      base.schema.fields :+ org.apache.spark.sql.types.StructField(
-        name, dataType, nullable = true))
-    writeSnapshot(fs, root, cur + 1, live,
-      committedBatchId(spark, path), Some(evolved), renames)
-    cur + 1
+    requireNoLatentCollision(spark, root, cur, name, "addColumn")
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      schema = cur.schema.add(name, dataType, nullable = true)))
   }
 
   /** Every physical column name the snapshot's live files carry plus
@@ -378,14 +409,13 @@ object Versioned {
     * [[addColumn]]/[[renameColumn]]. One footer-merge schema read,
     * no data scan. */
   private def requireNoLatentCollision(spark: SparkSession, root: Path,
-      live: Seq[(String, Long)], renames: Map[String, Seq[String]],
-      name: String, op: String): Unit = {
-    val chainNames = renames.values.flatten.map(_.toLowerCase).toSet
+      snap: Snapshot, name: String, op: String): Unit = {
+    val chainNames = snap.renames.values.flatten.map(_.toLowerCase).toSet
     val fileCols =
-      if (live.isEmpty) Set.empty[String]
+      if (snap.files.isEmpty) Set.empty[String]
       else spark.read.option("basePath", root.toString)
         .option("mergeSchema", "true")
-        .parquet(live.map(f => new Path(root, f._1).toString): _*)
+        .parquet(snap.files.map(f => new Path(root, f._1).toString): _*)
         .schema.fieldNames.map(_.toLowerCase).toSet
     require(!chainNames.contains(name.toLowerCase)
         && !fileCols.contains(name.toLowerCase),
@@ -407,33 +437,25 @@ object Versioned {
     * math key on them. Returns the committed version.
     */
   def dropColumn(spark: SparkSession, path: String, name: String): Int = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.dropColumn: $path is not a versioned table"))
-    val base = load(spark, path, Some(cur))
-    require(base.columns.exists(_.equalsIgnoreCase(name)),
+    val cur = snapshotOf(spark, path, "dropColumn")
+    val cols = cur.schema.fieldNames
+    require(cols.exists(_.equalsIgnoreCase(name)),
       s"Versioned.dropColumn: no column '$name' " +
-        s"(table has ${base.columns.mkString(",")})")
-    require(base.columns.length >= 2,
+        s"(table has ${cols.mkString(",")})")
+    require(cols.length >= 2,
       "Versioned.dropColumn: cannot drop the last column")
-    val live = readSnapshot(fs, root, cur)
-    require(!live.exists(_._1.contains(s"$name=")),
+    require(!isPartitionColumn(cur, name),
       s"Versioned.dropColumn: '$name' is a hive partition-directory " +
         "column — partition layout is not evolvable in place")
-    val remaining = org.apache.spark.sql.types.StructType(
-      base.schema.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    val renames = snapshotRenames(fs, root, cur)
-      .filterNot(_._1.equalsIgnoreCase(name))
-    writeSnapshot(fs, root, cur + 1, live,
-      committedBatchId(spark, path), Some(remaining), renames)
-    cur + 1
+    commit(spark, new Path(path), cur.copy(version = cur.version + 1,
+      schema = StructType(cur.schema.filterNot(_.name.equalsIgnoreCase(name))),
+      renames = cur.renames.filterNot(_._1.equalsIgnoreCase(name))))
   }
 
   /** RENAME COLUMN schema evolution (r17 verdict item 6): commit a
     * new snapshot whose declared schema carries `to` in `from`'s
     * place and whose rename map records the physical-name CHAIN
-    * (rename of rename composes), so [[alignTo]] reads old files'
+    * (rename of rename composes), so [[load]] reads old files'
     * `from` data and new files' `to` data as ONE column — per file
     * exactly one of the names exists, so the coalesce is a disjoint
     * union. Metadata-only, O(1) at any table size; later data commits
@@ -444,33 +466,25 @@ object Versioned {
   def renameColumn(spark: SparkSession, path: String, from: String,
       to: String): Int = {
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.renameColumn: $path is not a versioned table"))
-    val base = load(spark, path, Some(cur))
-    require(base.columns.exists(_.equalsIgnoreCase(from)),
+    val cur = snapshotOf(spark, path, "renameColumn")
+    val cols = cur.schema.fieldNames
+    require(cols.exists(_.equalsIgnoreCase(from)),
       s"Versioned.renameColumn: no column '$from' " +
-        s"(table has ${base.columns.mkString(",")})")
-    require(!base.columns.exists(_.equalsIgnoreCase(to)),
+        s"(table has ${cols.mkString(",")})")
+    require(!cols.exists(_.equalsIgnoreCase(to)),
       s"Versioned.renameColumn: target '$to' already exists")
     require(!from.equalsIgnoreCase(to),
       "Versioned.renameColumn: from and to are the same name")
-    val live = readSnapshot(fs, root, cur)
-    require(!live.exists(_._1.contains(s"$from=")),
+    require(!isPartitionColumn(cur, from),
       s"Versioned.renameColumn: '$from' is a hive partition-directory " +
         "column — partition layout is not evolvable in place")
-    val renames = snapshotRenames(fs, root, cur)
-    requireNoLatentCollision(spark, root, live, renames, to,
-      "renameColumn")
-    val chain = from +: renames.getOrElse(from, Nil)
-    val newRenames =
-      renames.filterNot(_._1.equalsIgnoreCase(from)) + (to -> chain)
-    val evolved = org.apache.spark.sql.types.StructType(
-      base.schema.fields.map(f =>
-        if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f))
-    writeSnapshot(fs, root, cur + 1, live,
-      committedBatchId(spark, path), Some(evolved), newRenames)
-    cur + 1
+    requireNoLatentCollision(spark, root, cur, to, "renameColumn")
+    val chain = from +: cur.renames.getOrElse(from, Nil)
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      schema = StructType(cur.schema.fields.map(f =>
+        if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f)),
+      renames = cur.renames.filterNot(_._1.equalsIgnoreCase(from)) +
+        (to -> chain)))
   }
 
   /** Retention expiry — the METADATA half of [[vacuum]] (r17 verdict
@@ -489,29 +503,25 @@ object Versioned {
       s"Versioned.expireSnapshots: keepLast must be >= 1, got $keepLast")
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.expireSnapshots: $path is not a versioned " +
-        "table"))
-    val vd = versionsDir(root)
-    val all = fs.listStatus(vd).toSeq.map(_.getPath.getName).collect {
-      case SnapRe(n) => n.toInt
-    }.sorted
+    val all = versions(fs, root)
+    if (all.isEmpty)
+      sys.error(s"Versioned.expireSnapshots: $path is not a versioned table")
     val expired = all.dropRight(keepLast)
     expired.foreach(v => fs.delete(snapshotPath(root, v), false))
     expired
   }
 
   /** Version an EXISTING bare-parquet directory: snapshot its current
-    * files as v1. Returns 1. */
+    * files, and the schema a plain read of them infers, as v1.
+    * Returns 1. */
   def init(spark: SparkSession, path: String): Int = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    require(currentVersion(spark, path).isEmpty,
+    require(versions(fs, root).isEmpty,
       s"Versioned.init: $path is already versioned")
     val files = dataFiles(fs, root).toSeq
     require(files.nonEmpty, s"Versioned.init: no parquet files at $path")
-    writeSnapshot(fs, root, 1, files)
-    1
+    commit(spark, root, Snapshot(1, files, inferSchema(spark, root, files)))
   }
 
   /** Write `df` as a fresh versioned table at `path` (must be empty
@@ -527,56 +537,13 @@ object Versioned {
   /** Read the table as of `version` (default: current). Reads ONLY
     * the snapshot's immutable files, so the result is stable under
     * any concurrent commits; hive partition columns are recovered via
-    * basePath. Loud error if a listed file was vacuumed or its length
-    * changed (immutability violated). */
+    * basePath. Planning opens no footer and runs no Spark job — the
+    * read schema comes from the snapshot. Loud error if a listed file
+    * was vacuumed or its length changed (immutability violated). */
   def load(spark: SparkSession, path: String,
-      version: Option[Int] = None): DataFrame = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val v = version.orElse(currentVersion(spark, path)).getOrElse(
-      sys.error(s"Versioned.load: $path is not a versioned table"))
-    val files = readSnapshot(fs, root, v)
-    require(files.nonEmpty,
-      s"Versioned.load: v$v of $path is empty — zero files to infer a " +
-        "schema from; keep a schema-bearing ancestor or read an " +
-        "earlier version")
-    files.foreach { case (rel, len) =>
-      val p = new Path(root, rel)
-      require(fs.exists(p) && fs.getFileStatus(p).getLen == len,
-        s"Versioned.load: $rel of v$v is missing or resized — " +
-          "vacuumed past this version, or immutability was violated")
-    }
-    val declared = snapshotSchema(fs, root, v)
-    val renames = declared.map(_ => snapshotRenames(fs, root, v))
-      .getOrElse(Map.empty[String, Seq[String]])
-    // post-evolution snapshots can mix file schemas (ADD COLUMN moves
-    // no data). r18: the union read schema is CONSTRUCTED from the
-    // declared schema + rename chains instead of a mergeSchema
-    // footer-sweep job — sound because this layer is the only writer
-    // and no operation changes a field's type, so every physical name
-    // in a chain was written with its field's declared type; a chain
-    // name no live file carries reads as typed NULLs (exactly what
-    // the merged read gave alignTo), and dropped columns are simply
-    // not requested. alignTo then presents the version's declared
-    // schema unchanged.
-    val paths = files.map(f => new Path(root, f._1).toString)
-    val raw = declared match {
-      case Some(sc) =>
-        import org.apache.spark.sql.types.{StructField, StructType}
-        val readFields = sc.fields.flatMap { f =>
-          (f.name +: renames.getOrElse(f.name, Nil)).map(n =>
-            StructField(n, f.dataType, nullable = true))
-        }
-        spark.read.schema(StructType(readFields.toIndexedSeq))
-          .option("basePath", root.toString)
-          .parquet(paths: _*)
-      case None =>
-        spark.read.option("basePath", root.toString)
-          .option("mergeSchema", "false")
-          .parquet(paths: _*)
-    }
-    declared.map(alignTo(raw, _, renames)).getOrElse(raw)
-  }
+      version: Option[Int] = None): DataFrame =
+    loadSnapshot(spark, new Path(path),
+      snapshotOf(spark, path, "load", version), "load")
 
   /** Zone-map-pruned read of a SNAPSHOT — [[load]] composed with
     * [[TableLoader.loadPruned]]'s data skipping: the snapshot's live
@@ -593,38 +560,39 @@ object Versioned {
   def loadPruned(spark: SparkSession, path: String, column: String,
       lower: Option[Any] = None, upper: Option[Any] = None,
       version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
     require(lower.isDefined || upper.isDefined,
       "Versioned.loadPruned: at least one of lower/upper must be set")
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val v = version.orElse(currentVersion(spark, path)).getOrElse(
-      sys.error(s"Versioned.loadPruned: $path is not a versioned table"))
-    val files = readSnapshot(fs, root, v)
-    require(files.nonEmpty, s"Versioned.loadPruned: v$v of $path is empty")
-    files.foreach { case (rel, len) =>
-      val p = new Path(root, rel)
-      require(fs.exists(p) && fs.getFileStatus(p).getLen == len,
-        s"Versioned.loadPruned: $rel of v$v is missing or resized — " +
-          "vacuumed past this version, or immutability was violated")
-    }
-    val kept = TableLoader.pruneFileList(spark, path, files, column,
+    val snap = snapshotOf(spark, path, "loadPruned", version)
+    val live = livePaths(spark, root, snap, "loadPruned")
+    val kept = TableLoader.pruneFileList(spark, path, snap.files, column,
       lower, upper)
-    // no candidate: one live file supplies the schema, the filter
-    // returns the correct empty result
-    val paths =
-      if (kept.nonEmpty) kept
-      else files.take(1).map(f => new Path(root, f._1).toString)
-    val pred = (lower.map(l => c(column) >= lit(l)) ++
-      upper.map(u => c(column) <= lit(u))).reduce(_ && _)
-    val declared = snapshotSchema(fs, root, v)
-    val raw = spark.read.option("basePath", root.toString)
-      .option("mergeSchema", declared.isDefined.toString)
-      .parquet(paths: _*)
-    // align BEFORE the filter so a post-evolution predicate column that
-    // some pruned-in files lack still resolves (as typed NULL)
-    declared.map(alignTo(raw, _, snapshotRenames(fs, root, v)))
-      .getOrElse(raw).filter(pred)
+    val pred = (lower.map(l => col(column) >= lit(l)) ++
+      upper.map(u => col(column) <= lit(u))).reduce(_ && _)
+    // no candidate: read one live file and let the filter return the
+    // correct empty result. The filter applies after the declared-
+    // schema read, so a post-evolution predicate column that some
+    // pruned-in files lack still resolves (as typed NULL)
+    read(spark, root, snap, if (kept.nonEmpty) kept else live.take(1))
+      .filter(pred)
+  }
+
+  /** The distinct partition values `rows` touch — at most `max`, else
+    * a loud error naming `op` — and the predicate selecting exactly
+    * those partitions. */
+  private def touchedPartitions(rows: DataFrame, partitionCols: Seq[String],
+      max: Int, op: String): (Array[Row], Column) = {
+    val touched = rows.select(partitionCols.map(col): _*).distinct()
+      .limit(max + 1).collect()
+    require(touched.length <= max,
+      s"Versioned.$op: > $max touched partitions — raise " +
+        "maxTouchedPartitions knowingly")
+    val pred = touched.map { row =>
+      partitionCols.zipWithIndex
+        .map { case (c, i) => col(c) <=> lit(row.get(i)) }
+        .reduce(_ && _)
+    }.reduceOption(_ || _).getOrElse(lit(false))
+    (touched, pred)
   }
 
   /** Versioned COW MERGE: same semantics and same touched-partition
@@ -641,35 +609,26 @@ object Versioned {
   def mergeInto(spark: SparkSession, path: String,
       source: DataFrame, on: Seq[String], partitionCols: Seq[String],
       whenMatchedUpdate: Boolean = true,
-      whenMatchedDeleteIf: Option[org.apache.spark.sql.Column] = None,
+      whenMatchedDeleteIf: Option[Column] = None,
       whenNotMatchedInsert: Boolean = true,
       maxTouchedPartitions: Int = 10000): Int = {
     require(partitionCols.nonEmpty, "Versioned.mergeInto: no partition columns")
     require(partitionCols.forall(on.contains),
       s"Versioned.mergeInto: partitionCols (${partitionCols.mkString(",")}) " +
         s"must be a subset of the merge keys (${on.mkString(",")})")
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.mergeInto: $path is not a versioned table"))
-    val base = load(spark, path, Some(cur))
-    requireRenderablePartitionTypes(base, partitionCols, "mergeInto")
-    // align to the read-back column order and types (the
+    val root = new Path(path)
+    val cur = snapshotOf(spark, path, "mergeInto")
+    val base = loadSnapshot(spark, root, cur, "mergeInto")
+    requireRenderablePartitionTypes(cur.schema, partitionCols, "mergeInto")
+    // align to the declared column order and types (the
     // mergeIntoParquet contract — union widening would break the
     // partition-value diff and SET */INSERT * schema equality)
-    val src = source.select(base.columns.map(c =>
-      col(c).cast(base.schema(c).dataType).as(c)).toIndexedSeq: _*)
-    val touched = src.select(partitionCols.map(col): _*).distinct()
-      .limit(maxTouchedPartitions + 1).collect()
-    require(touched.length <= maxTouchedPartitions,
-      s"Versioned.mergeInto: source touches > $maxTouchedPartitions " +
-        "partitions — raise maxTouchedPartitions knowingly")
-    val touchedPred = touched.map { row =>
-      partitionCols.zipWithIndex
-        .map { case (c, i) => col(c) <=> lit(row.get(i)) }
-        .reduce(_ && _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
+    val src = castTo(source, cur.schema)
+    val (touched, touchedPred) = touchedPartitions(src, partitionCols,
+      maxTouchedPartitions, "mergeInto")
     val merged = graft.Graft.merge(base.filter(touchedPred), src, on,
       whenMatchedUpdate, whenMatchedDeleteIf, whenNotMatchedInsert)
-    commitRewrite(spark, path, partitionCols, touched, merged)
+    commitRewrite(spark, root, cur, partitionCols, touched, merged)
   }
 
   /** Shared commit tail for partition-confined rewrites ([[mergeInto]],
@@ -684,23 +643,14 @@ object Versioned {
     * received rows); partition types are pre-validated renderable so
     * the two coincide — the union is defense in depth, not a crutch.
     */
-  private def commitRewrite(spark: SparkSession, path: String,
-      partitionCols: Seq[String],
-      touched: Array[org.apache.spark.sql.Row],
+  private def commitRewrite(spark: SparkSession, root: Path, cur: Snapshot,
+      partitionCols: Seq[String], touched: Array[Row],
       replacement: DataFrame): Int = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.commitRewrite: $path is not a versioned table"))
-    val live = readSnapshot(fs, root, cur)
-    val declared = snapshotSchema(fs, root, cur) // carry evolution forward
-    val renames = snapshotRenames(fs, root, cur)
     // appending never deletes, so `replacement` may keep reading the
     // previous version's files while the new ones are written
-    val newFiles = stampedAppend(fs, root, replacement, partitionCols)
-    if (partitionCols.isEmpty) {
-      writeSnapshot(fs, root, cur + 1, newFiles, None, declared, renames)
-    } else {
+    val newFiles = stampedAppend(fsOf(spark, root), root, replacement,
+      partitionCols)
+    val kept = if (partitionCols.isEmpty) Nil else {
       val rendered = touched.map { row =>
         partitionCols.zipWithIndex.map { case (c, i) =>
           val s = Option(row.get(i)).map(_.toString)
@@ -711,15 +661,12 @@ object Versioned {
       val fromFiles = newFiles.map(_._1).collect {
         case rel if rel.lastIndexOf('/') >= 0 =>
           rel.substring(0, rel.lastIndexOf('/') + 1)
-      }.distinct
-      val dropped = (rendered ++ fromFiles).distinct
-      val kept = live.filterNot { case (rel, _) =>
-        dropped.exists(rel.startsWith)
       }
-      writeSnapshot(fs, root, cur + 1, kept ++ newFiles, None, declared,
-        renames)
+      val dropped = (rendered ++ fromFiles).distinct
+      cur.files.filterNot { case (rel, _) => dropped.exists(rel.startsWith) }
     }
-    cur + 1
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      files = kept ++ newFiles))
   }
 
   /** Versioned INSERT: append `rows` as new files, commit previous
@@ -728,7 +675,8 @@ object Versioned {
     * readable. Returns the committed version. */
   def insertInto(spark: SparkSession, path: String, rows: DataFrame,
       partitionCols: Seq[String] = Nil): Int =
-    insertCommit(spark, path, rows, partitionCols, None)
+    append(spark, new Path(path), snapshotOf(spark, path, "insertInto"),
+      rows, partitionCols)
 
   /** Exactly-once micro-batch sink commit — the
     * `writeStream.foreachBatch` body for a versioned table: appends
@@ -737,10 +685,11 @@ object Versioned {
     * after recovery) whose id is ≤ the table's committed batchId is
     * SKIPPED, so restarts never double-append — the table-format
     * idempotent-sink protocol (the reason plain parquet `foreachBatch`
-    * sinks are at-least-once) on the same snapshot machinery. Returns
-    * the table's version after the call (unchanged on a skip;
-    * PartitioningSpec pins replay == no-op and mid-stream version
-    * reads).
+    * sinks are at-least-once) on the same snapshot machinery. Every
+    * later commit (DML, evolution, compaction) carries the stamp
+    * forward, so replay protection survives them. Returns the table's
+    * version after the call (unchanged on a skip; PartitioningSpec
+    * pins replay == no-op and mid-stream version reads).
     *
     * Usage:
     * {{{
@@ -751,40 +700,57 @@ object Versioned {
     */
   def insertIntoStreamBatch(spark: SparkSession, path: String,
       rows: DataFrame, partitionCols: Seq[String], batchId: Long): Int = {
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.insertIntoStreamBatch: $path is not a " +
-        "versioned table — create/init it before starting the stream"))
-    committedBatchId(spark, path) match {
-      case Some(last) if batchId <= last => cur // replay: idempotent skip
-      case _ => insertCommit(spark, path, rows, partitionCols, Some(batchId))
+    val cur = snapshotOf(spark, path, "insertIntoStreamBatch")
+    cur.batchId match {
+      case Some(last) if batchId <= last => cur.version // replay: skip
+      // the append's commit copies `cur`, so it carries the new stamp
+      case _ => append(spark, new Path(path),
+        cur.copy(batchId = Some(batchId)), rows, partitionCols)
     }
   }
 
-  private def insertCommit(spark: SparkSession, path: String,
-      rows: DataFrame, partitionCols: Seq[String],
-      batchId: Option[Long]): Int = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.insertInto: $path is not a versioned table"))
-    val live = readSnapshot(fs, root, cur)
-    val base = load(spark, path, Some(cur))
+  /** The streaming batchId the current snapshot carries, if any —
+    * the idempotence marker for replay skipping. */
+  def committedBatchId(spark: SparkSession, path: String): Option[Long] =
+    currentVersion(spark, path)
+      .flatMap(v => readSnapshot(spark, new Path(path), v).batchId)
+
+  private def append(spark: SparkSession, root: Path, cur: Snapshot,
+      rows: DataFrame, partitionCols: Seq[String]): Int = {
+    val cols = cur.schema.fieldNames
     require(rows.columns.map(_.toLowerCase).toSet
-        == base.columns.map(_.toLowerCase).toSet,
+        == cols.map(_.toLowerCase).toSet,
       s"Versioned.insertInto: schema mismatch — table has " +
-        s"${base.columns.mkString(",")}, rows have ${rows.columns.mkString(",")}")
-    val aligned = rows.select(base.columns.map(c =>
-      col(c).cast(base.schema(c).dataType).as(c)).toIndexedSeq: _*)
+        s"${cols.mkString(",")}, rows have ${rows.columns.mkString(",")}")
     // stamped append (never a before/after directory diff): under a
     // violated single-writer contract a concurrent appender's files
     // could land in this commit's listing window — the stamp makes
     // file attribution exact, so the winner's snapshot provably
     // contains only its own files and the loser dies on the v-rename
-    val newFiles = stampedAppend(fs, root, aligned, partitionCols)
-    writeSnapshot(fs, root, cur + 1, live ++ newFiles, batchId,
-      snapshotSchema(fs, root, cur), // carry evolution forward
-      snapshotRenames(fs, root, cur))
-    cur + 1
+    val newFiles = stampedAppend(fsOf(spark, root), root,
+      castTo(rows, cur.schema), partitionCols)
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      files = cur.files ++ newFiles))
+  }
+
+  /** Shared body of [[updateWhere]] and [[deleteWhere]]: without
+    * partition columns the whole table is rewritten; with them only
+    * the partitions holding a `hit` row are, and a statement that hits
+    * no row mints no version. */
+  private def rewriteWhere(spark: SparkSession, path: String, cur: Snapshot,
+      hit: Column, partitionCols: Seq[String], maxTouchedPartitions: Int,
+      op: String)(rewrite: DataFrame => DataFrame): Int = {
+    val root = new Path(path)
+    val base = loadSnapshot(spark, root, cur, op)
+    if (partitionCols.isEmpty)
+      commitRewrite(spark, root, cur, Nil, Array.empty, rewrite(base))
+    else {
+      val (touched, touchedPred) = touchedPartitions(base.filter(hit),
+        partitionCols, maxTouchedPartitions, op)
+      if (touched.isEmpty) cur.version
+      else commitRewrite(spark, root, cur, partitionCols, touched,
+        rewrite(base.filter(touchedPred)))
+    }
   }
 
   /** Persisted `UPDATE ... SET ... WHERE`: rows matching `cond` get
@@ -802,53 +768,34 @@ object Versioned {
     * confinement); without, the whole table rewrites as new files.
     */
   def updateWhere(spark: SparkSession, path: String,
-      sets: Seq[(String, org.apache.spark.sql.Column)],
-      cond: org.apache.spark.sql.Column,
+      sets: Seq[(String, Column)],
+      cond: Column,
       partitionCols: Seq[String] = Nil,
       maxTouchedPartitions: Int = 10000): Int = {
-    import org.apache.spark.sql.functions.{coalesce, when}
+    import org.apache.spark.sql.functions.when
     require(sets.nonEmpty, "Versioned.updateWhere: empty SET list")
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.updateWhere: $path is not a versioned table"))
-    val base = load(spark, path, Some(cur))
+    val cur = snapshotOf(spark, path, "updateWhere")
+    val cols = cur.schema.fieldNames
     sets.foreach { case (c, _) =>
-      require(base.columns.exists(_.equalsIgnoreCase(c)),
+      require(cols.exists(_.equalsIgnoreCase(c)),
         s"Versioned.updateWhere: unknown column '$c' (table has " +
-          s"${base.columns.mkString(",")})")
+          s"${cols.mkString(",")})")
     }
     require(!sets.exists { case (c, _) =>
         partitionCols.exists(_.equalsIgnoreCase(c)) },
       "Versioned.updateWhere: SET on a partition column would move rows " +
         "between partitions — phrase it as a mergeInto (delete + insert)")
-    if (partitionCols.nonEmpty)
-      requireRenderablePartitionTypes(base, partitionCols, "updateWhere")
+    requireRenderablePartitionTypes(cur.schema, partitionCols, "updateWhere")
     val hit = coalesce(cond, lit(false))
-    def updated(df: DataFrame): DataFrame = df.select(df.columns.map { c =>
-      sets.find(_._1.equalsIgnoreCase(c)) match {
-        case Some((_, e)) => when(hit, e).otherwise(col(c))
-          .cast(df.schema(c).dataType).as(c)
-        case None => col(c)
-      }
-    }.toIndexedSeq: _*)
-    if (partitionCols.isEmpty)
-      commitRewrite(spark, path, Nil,
-        Array.empty[org.apache.spark.sql.Row], updated(base))
-    else {
-      val touched = base.filter(hit).select(partitionCols.map(col): _*)
-        .distinct().limit(maxTouchedPartitions + 1).collect()
-      require(touched.length <= maxTouchedPartitions,
-        s"Versioned.updateWhere: > $maxTouchedPartitions touched " +
-          "partitions — raise maxTouchedPartitions knowingly")
-      if (touched.isEmpty) cur
-      else {
-        val touchedPred = touched.map { row =>
-          partitionCols.zipWithIndex
-            .map { case (c, i) => col(c) <=> lit(row.get(i)) }
-            .reduce(_ && _)
-        }.reduce(_ || _)
-        commitRewrite(spark, path, partitionCols, touched,
-          updated(base.filter(touchedPred)))
-      }
+    rewriteWhere(spark, path, cur, hit, partitionCols, maxTouchedPartitions,
+        "updateWhere") { df =>
+      df.select(df.columns.map { c =>
+        sets.find(_._1.equalsIgnoreCase(c)) match {
+          case Some((_, e)) => when(hit, e).otherwise(col(c))
+            .cast(df.schema(c).dataType).as(c)
+          case None => col(c)
+        }
+      }.toIndexedSeq: _*)
     }
   }
 
@@ -861,36 +808,15 @@ object Versioned {
     * snapshot.
     */
   def deleteWhere(spark: SparkSession, path: String,
-      cond: org.apache.spark.sql.Column,
+      cond: Column,
       partitionCols: Seq[String] = Nil,
       maxTouchedPartitions: Int = 10000): Int = {
-    import org.apache.spark.sql.functions.{coalesce, not}
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.deleteWhere: $path is not a versioned table"))
-    val base = load(spark, path, Some(cur))
-    if (partitionCols.nonEmpty)
-      requireRenderablePartitionTypes(base, partitionCols, "deleteWhere")
+    import org.apache.spark.sql.functions.not
+    val cur = snapshotOf(spark, path, "deleteWhere")
+    requireRenderablePartitionTypes(cur.schema, partitionCols, "deleteWhere")
     val hit = coalesce(cond, lit(false))
-    if (partitionCols.isEmpty)
-      commitRewrite(spark, path, Nil,
-        Array.empty[org.apache.spark.sql.Row], base.filter(not(hit)))
-    else {
-      val touched = base.filter(hit).select(partitionCols.map(col): _*)
-        .distinct().limit(maxTouchedPartitions + 1).collect()
-      require(touched.length <= maxTouchedPartitions,
-        s"Versioned.deleteWhere: > $maxTouchedPartitions touched " +
-          "partitions — raise maxTouchedPartitions knowingly")
-      if (touched.isEmpty) cur
-      else {
-        val touchedPred = touched.map { row =>
-          partitionCols.zipWithIndex
-            .map { case (c, i) => col(c) <=> lit(row.get(i)) }
-            .reduce(_ && _)
-        }.reduce(_ || _)
-        commitRewrite(spark, path, partitionCols, touched,
-          base.filter(touchedPred).filter(not(hit)))
-      }
-    }
+    rewriteWhere(spark, path, cur, hit, partitionCols, maxTouchedPartitions,
+      "deleteWhere")(_.filter(not(hit)))
   }
 
   /** Small-file compaction: rewrite every partition directory holding
@@ -918,30 +844,22 @@ object Versioned {
     require(targetFileBytes >= 1L,
       s"Versioned.compact: targetFileBytes must be >= 1, got $targetFileBytes")
     val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.compact: $path is not a versioned table"))
-    val live = readSnapshot(fs, root, cur)
+    val cur = snapshotOf(spark, path, "compact")
     def dirOf(rel: String): String = {
       val slash = rel.lastIndexOf('/')
       if (slash < 0) "" else rel.substring(0, slash)
     }
-    val byDir = live.groupBy(f => dirOf(f._1))
+    val byDir = cur.files.groupBy(f => dirOf(f._1))
     val toCompact = byDir.filter(_._2.size > 1)
-    if (toCompact.isEmpty) return cur
+    if (toCompact.isEmpty) return cur.version
     val keep = byDir.view.filterKeys(!toCompact.contains(_))
       .values.flatten.toSeq
     val paths = toCompact.values.flatten
       .map(f => new Path(root, f._1).toString).toSeq
-    val declared = snapshotSchema(fs, root, cur)
-    // post-evolution directories can mix file schemas — compacting
-    // with a plain read would silently drop the added column from the
-    // rewritten files; union-widen and align like [[load]]
-    val raw = spark.read.option("basePath", root.toString)
-      .option("mergeSchema", declared.isDefined.toString)
-      .parquet(paths: _*)
-    val renames = snapshotRenames(fs, root, cur)
-    val df = declared.map(alignTo(raw, _, renames)).getOrElse(raw)
+    // the declared-schema read keeps every column across
+    // mixed-schema directories (a plain read would silently drop an
+    // added column from the rewritten files)
+    val df = read(spark, root, cur, paths)
     partitionCols.foreach(c => require(df.columns.contains(c),
       s"Versioned.compact: partition column '$c' not in the table " +
         s"(${df.columns.mkString(",")}) — pass the table's hive layout"))
@@ -972,11 +890,9 @@ object Versioned {
             .drop("_graft_bin")
         }
       }
-    val newFiles = stampedAppend(fs, root, out, partitionCols)
-    // carry the streaming stamp AND the declared schema forward
-    writeSnapshot(fs, root, cur + 1, keep ++ newFiles,
-      committedBatchId(spark, path), declared, renames)
-    cur + 1
+    val newFiles = stampedAppend(fsOf(spark, root), root, out, partitionCols)
+    commit(spark, root, cur.copy(version = cur.version + 1,
+      files = keep ++ newFiles))
   }
 
   /** Retention: drop all snapshots older than the newest `keepLast`
@@ -999,24 +915,21 @@ object Versioned {
     require(keepLast >= 1, s"Versioned.vacuum: keepLast must be >= 1")
     val root = new Path(path)
     val fs = fsOf(spark, root)
-    currentVersion(spark, path).getOrElse(
-      sys.error(s"Versioned.vacuum: $path is not a versioned table"))
-    val vd = versionsDir(root)
-    val all = fs.listStatus(vd).toSeq.map(_.getPath.getName).collect {
-      case SnapRe(n) => n.toInt
-    }.sorted
-    val keep = all.takeRight(keepLast).toSet
-    val referenced = keep.toSeq.flatMap(v =>
-      readSnapshot(fs, root, v).map(_._1)).toSet
+    val all = versions(fs, root)
+    if (all.isEmpty)
+      sys.error(s"Versioned.vacuum: $path is not a versioned table")
+    val keep = all.takeRight(keepLast)
+    val referenced = keep.flatMap(v =>
+      readSnapshot(spark, root, v).files.map(_._1)).toSet
     val latestMtime =
-      fs.getFileStatus(snapshotPath(root, all.max)).getModificationTime
+      fs.getFileStatus(snapshotPath(root, all.last)).getModificationTime
     val doomed = (dataFiles(fs, root).keySet -- referenced).toSeq.sorted
       .filter { rel =>
         val p = new Path(root, rel)
         fs.exists(p) && fs.getFileStatus(p).getModificationTime <= latestMtime
       }
     doomed.foreach(rel => fs.delete(new Path(root, rel), false))
-    all.filterNot(keep).foreach(v =>
+    all.dropRight(keepLast).foreach(v =>
       fs.delete(snapshotPath(root, v), false))
     // staged-orphan sweep (r16 ADVICE): a crash between stampedAppend's
     // staging write and its cleanup delete leaves a .stage-<stamp> dir
@@ -1025,7 +938,7 @@ object Versioned {
     // in-flight safety margin as above: a stage dir NEWER than the
     // latest committed snapshot may belong to a racing writer (already
     // a contract violation) and is left alone until a later vacuum.
-    val stagedOrphans = fs.listStatus(vd).toSeq.filter { st =>
+    val stagedOrphans = fs.listStatus(versionsDir(root)).toSeq.filter { st =>
       st.isDirectory && st.getPath.getName.startsWith(".stage-") &&
         st.getModificationTime <= latestMtime
     }

@@ -490,6 +490,29 @@ class PartitioningSpec extends SparkTestBase {
     assert(Versioned.insertIntoStreamBatch(spark, dir,
       Seq((9, 90L, 9.0)).toDF("p", "k", "v"), Seq("p"), batchId = 2L) === 4)
     assert(Versioned.load(spark, dir).count() === 5L)
+    // every other commit carries the stamp forward: replaying batch 2
+    // after any DML is still a no-op, never a second append
+    val dml: Seq[(String, () => Int)] = Seq(
+      "updateWhere" -> (() => Versioned.updateWhere(spark, dir,
+        Seq("v" -> lit(7.0)), col("k") === 90L, Seq("p"))),
+      "insertInto" -> (() => Versioned.insertInto(spark, dir,
+        Seq((8, 80L, 8.0)).toDF("p", "k", "v"), Seq("p"))),
+      "mergeInto" -> (() => Versioned.mergeInto(spark, dir,
+        Seq((8, 80L, 6.0)).toDF("p", "k", "v"), on = Seq("p", "k"),
+        partitionCols = Seq("p"))),
+      "deleteWhere" -> (() => Versioned.deleteWhere(spark, dir,
+        col("k") === 80L, Seq("p"))))
+    dml.foreach { case (op, run) =>
+      val v = run()
+      val rows = Versioned.load(spark, dir).count()
+      assert(Versioned.committedBatchId(spark, dir) === Some(2L),
+        s"$op dropped the batch stamp")
+      assert(Versioned.insertIntoStreamBatch(spark, dir,
+        Seq((9, 91L, 9.0)).toDF("p", "k", "v"), Seq("p"),
+        batchId = 2L) === v, s"replay after $op committed")
+      assert(Versioned.load(spark, dir).count() === rows,
+        s"replay after $op appended the batch twice")
+    }
   }
 
   test("Versioned.loadPruned: snapshot isolation composes with zone-map " +
@@ -599,7 +622,7 @@ class PartitioningSpec extends SparkTestBase {
       .collect().toSet === Set(10L, 11L))
     assert(new java.io.File(s"$dir/p=1/foreign.parquet").exists(),
       "the foreign file is an orphan for vacuum, not deleted here")
-    // (the loser-loud half of the contract is writeSnapshot's
+    // (the loser-loud half of the contract is the snapshot commit's
     // exists-check + atomic rename: two racers for the same v — a true
     // interleaving this single-threaded test cannot stage — have one
     // rename fail; what the stamp adds, proven above, is that the
@@ -896,5 +919,126 @@ class PartitioningSpec extends SparkTestBase {
         Seq((1, 10L, 2.0)).toDF("p", "k", "v"),
         on = Seq("k"), partitionCols = Seq("p"))
     }
+  }
+
+  test("Versioned.dropColumn/renameColumn: the partition-column guard " +
+      "matches whole path segments — 'k' is not partition column 'pk'") {
+    import spark.implicits._
+    import graft.tables.Versioned
+    val dir = Files.createTempDirectory("vsegment").toString + "/t"
+    Versioned.create(spark, dir,
+      Seq((1, "a", 10L, 1.0, 5), (2, "b", 20L, 2.0, 6))
+        .toDF("pk", "pv", "k", "v", "w"), Seq("pk", "pv"))
+    // 'k' and 'v' are substrings of the segments 'pk=1' and 'pv=a', but
+    // they are data columns and evolve like any other
+    assert(Versioned.dropColumn(spark, dir, "k") === 2)
+    assert(Versioned.renameColumn(spark, dir, "v", "value") === 3)
+    assert(Versioned.load(spark, dir).columns.toSeq
+      === Seq("value", "w", "pk", "pv"))
+    assert(Versioned.load(spark, dir).select("pk", "value")
+      .as[(Int, Double)].collect().toSet === Set((1, 1.0), (2, 2.0)))
+    // the real partition columns stay refused, in any case
+    intercept[IllegalArgumentException] {
+      Versioned.dropColumn(spark, dir, "pk")
+    }
+    intercept[IllegalArgumentException] {
+      Versioned.renameColumn(spark, dir, "PV", "q")
+    }
+  }
+
+  test("Versioned: a snapshot without a schema field (written before " +
+      "schemas were recorded) still loads; the next commit records it") {
+    import spark.implicits._
+    import graft.tables.Versioned
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val dir = Files.createTempDirectory("vlegacy").toString + "/t"
+    Seq((1, 10L, 1.0), (2, 20L, 2.0)).toDF("p", "k", "v")
+      .write.partitionBy("p").parquet(dir)
+    val root = new java.io.File(dir)
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    val entries = walk(root).map(f =>
+      s"""{"path":"${root.toURI.relativize(f.toURI).getPath}",""" +
+        s""""len":${f.length}}""")
+    val vd = new java.io.File(root, Versioned.VersionsDirName)
+    assert(vd.mkdirs())
+    Files.write(new java.io.File(vd, "v000001.json").toPath,
+      s"""{"version":1,"files":[${entries.mkString(",")}]}"""
+        .getBytes("UTF-8"))
+    val v1 = Versioned.load(spark, dir)
+    assert(v1.columns.toSeq === Seq("k", "v", "p"))
+    assert(v1.select("p", "k", "v").as[(Int, Long, Double)].collect().toSet
+      === Set((1, 10L, 1.0), (2, 20L, 2.0)))
+    assert(Versioned.insertInto(spark, dir,
+      Seq((3, 30L, 3.0)).toDF("p", "k", "v"), Seq("p")) === 2)
+    val doc = org.json4s.jackson.JsonMethods.parse(new String(
+      Files.readAllBytes(new java.io.File(vd, "v000002.json").toPath),
+      "UTF-8"))
+    val recorded = (doc \ "schema") match {
+      case org.json4s.JString(json) =>
+        DataType.fromJson(json).asInstanceOf[StructType]
+      case other => fail(s"v2 carries no schema: $other")
+    }
+    assert(recorded.fields.map(f => f.name -> f.dataType).toSeq
+      === v1.schema.fields.map(f => f.name -> f.dataType).toSeq)
+    assert(Versioned.load(spark, dir).count() === 3L)
+  }
+
+  /** Spark jobs `body` submits, counted through a job group. A marker
+    * job in a second group follows it; once the status store shows
+    * the marker, it holds every earlier job too (the listener bus
+    * delivers events in order). */
+  private def jobsOf(body: => Any): Int = {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    eventually(timeout(30.seconds), interval(20.millis)) {
+      assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty)
+    }
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("Versioned: job budgets — building a load submits no Spark job; " +
+      "the time-travel and delete shapes run pinned job counts") {
+    import graft.tables.Versioned
+    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+      .select("o_orderkey", "o_orderstatus", "o_totalprice")
+    // the q_time_travel shape: create, a three-clause merge, two loads
+    val tt = Files.createTempDirectory("vjobs").toString + "/tt"
+    val ttCreate = jobsOf(Versioned.create(spark, tt, orders,
+      Seq("o_orderstatus")))
+    assert(jobsOf(Versioned.load(spark, tt)) === 0,
+      "building a load must plan from the snapshot alone")
+    val src = orders.filter(col("o_orderkey") % 10 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") + 100.0)
+      .unionByName(orders.filter(col("o_orderkey") % 10 === 3)
+        .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
+        .withColumn("o_orderstatus", lit("N")))
+    val ttMerge = jobsOf(Versioned.mergeInto(spark, tt, src,
+      on = Seq("o_orderkey", "o_orderstatus"),
+      partitionCols = Seq("o_orderstatus"),
+      whenMatchedDeleteIf = Some(col("o_orderkey") % 20 === 0)))
+    val ttLoads = jobsOf {
+      Versioned.load(spark, tt, Some(1))
+      Versioned.load(spark, tt, Some(2))
+    }
+    assert((ttCreate, ttMerge, ttLoads) === ((2, 6, 0)),
+      "time-travel shape jobs (create, mergeInto, two loads)")
+    // the q_delete_sql shape: create, a partition-confined delete, load
+    val del = Files.createTempDirectory("vjobs").toString + "/del"
+    val delCreate = jobsOf(Versioned.create(spark, del, orders,
+      Seq("o_orderstatus")))
+    val delDelete = jobsOf(Versioned.deleteWhere(spark, del,
+      col("o_orderstatus") === "P" || col("o_totalprice") > 200000,
+      Seq("o_orderstatus")))
+    val delLoad = jobsOf(Versioned.load(spark, del, Some(2)))
+    assert((delCreate, delDelete, delLoad) === ((2, 3, 0)),
+      "delete shape jobs (create, deleteWhere, load)")
   }
 }
